@@ -29,9 +29,7 @@ from .model import (
     DOC_TYPE_PNG,
     DOC_TYPE_RTF,
     DOC_TYPE_TXT,
-    STATUS_SUCCESS,
     ExtractionResult,
-    PageResult,
 )
 from .office_extract import extract_ooxml, extract_txt
 from .pdf_extract import extract_pdf
@@ -234,7 +232,3 @@ def extract_document(url: str, data: bytes, config=None) -> ExtractionResult:
             error_message=message,
             pages=[],
         )
-
-
-def success_result(doc_type: str, pages: list[PageResult]) -> ExtractionResult:
-    return ExtractionResult(doc_type=doc_type, status=STATUS_SUCCESS, pages=pages)

@@ -227,23 +227,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(sh: "DataFrame") -> "DataFrame":
-    """(doc_id, mh_0..mh_{K-1}): min over shingles of (a*h64+b) mod P.
-    One shuffle (groupBy doc_id); all K mins computed map-side first.
-    Reference implementation over exploded (doc_id, shingle) rows — the
-    LSH hot path fuses signatures straight into band keys instead (see
-    :func:`minhash_lsh_pairs`)."""
-    # reduce the 60-bit hash mod P first so a*h stays < 2^62 (ANSI-safe)
-    hcol = h64(F.col("shingle")) % F.lit(_MH_PRIME)
-    aggs = [
-        F.min((F.lit(MH_A[j]) * hcol + F.lit(MH_B[j])) % F.lit(_MH_PRIME)).alias(
-            f"mh_{j}"
-        )
-        for j in range(MINHASH_K)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_lsh_pairs(
     docs: "DataFrame", tau_pct: int = 80, n: int = 3
 ) -> "DataFrame":
@@ -323,8 +306,13 @@ def dedup_clusters(pairs: "DataFrame", max_iter: int = 20) -> "DataFrame":
       round replays the upstream edge plan (for near-dup input that is the
       whole shingle inverted-index join — the single biggest cost of the
       old loop).
-    - one action per round: the changed-count rides the checkpointed frame
-      as a flag column, so convergence detection is a count over already-
+    - every intermediate is a local checkpoint, never a cached plan: a
+      cached plan's output partitioning is frozen at
+      ``spark.sql.shuffle.partitions`` (AQE may not coalesce it), so every
+      join downstream of it fans out to that many tasks however few rows
+      it holds. A checkpoint is a scan of rows AQE has already coalesced.
+    - the changed-count rides the last checkpoint of a round as a flag
+      column, so convergence detection is a count over already-
       materialized partitions, not a second derivation.
     """
     edges = pairs.select(
@@ -379,9 +367,11 @@ def dedup_clusters(pairs: "DataFrame", max_iter: int = 20) -> "DataFrame":
                 labels["label"].alias("_old"),
             )
             # both sides of the pointer-jump self-join below reference this
-            # plan: without a cache the propagation shuffle runs TWICE per
-            # round (persist is lazy — still one action per round)
-            .persist()
+            # plan, so it is materialized once. Not with persist(): the
+            # cached plan would keep spark.sql.shuffle.partitions output
+            # partitions, and the self-join and checkpoint below inherit
+            # them (200 tasks per stage for a few hundred rows).
+            .localCheckpoint(eager=True)
         )
         # pointer jump: label <- min(label, label's current label). Labels
         # are node ids, so every label has a row; left join for safety.
@@ -411,12 +401,9 @@ def dedup_clusters(pairs: "DataFrame", max_iter: int = 20) -> "DataFrame":
         )
         # LAZY checkpoint + count: the convergence count IS the action
         # that materializes (and lineage-truncates) this round's labels,
-        # so each round runs ONE job instead of an eager-checkpoint job
-        # followed by a count job. prop must stay cached until the count
-        # has executed the self-join through it.
+        # so it needs no eager-checkpoint job of its own.
         new_labels = jumped.localCheckpoint(eager=False)
         changed = new_labels.filter(F.col("_changed")).count()
-        prop.unpersist()
         labels = new_labels.drop("_changed")
         if changed == 0:
             converged = True

@@ -80,6 +80,9 @@ def _collect_queries(embeddings: "DataFrame", query_ids_below: int):
         .collect(),
         key=lambda r: r["vec_id"],
     )
+    if not rows:
+        # reshape(0, -1) cannot infer a width; callers skip on empty ids
+        return [], np.zeros((0, 0))
     ids = [int(r["vec_id"]) for r in rows]
     mat = np.array(
         [list(r["embedding"]) for r in rows], dtype="float64"

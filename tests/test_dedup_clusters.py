@@ -35,6 +35,38 @@ def test_multiple_components_and_min_keeper(spark):
                    40: 40, 41: 40, 42: 40}
 
 
+def test_rounds_do_not_fan_out_to_shuffle_partitions(spark):
+    """At the default 200 shuffle partitions a small graph must still run
+    few tasks: no round may materialize through a cached plan, whose output
+    partitioning stays at spark.sql.shuffle.partitions (AQE cannot coalesce
+    it) and fans every later join of the round out to 200 tasks."""
+    edges = [(5, 3), (3, 9), (20, 21), (40, 41), (41, 42), (40, 42)]
+    edges += [(i, i + 1) for i in range(100, 108)]
+    want = {3: 3, 5: 3, 9: 3, 20: 20, 21: 20, 40: 40, 41: 40, 42: 40}
+    want.update({i: 100 for i in range(100, 109)})
+    sc = spark.sparkContext
+    group = "test_dedup_clusters_task_count"
+    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    saved_group = sc.getLocalProperty("spark.jobGroup.id")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        got = {r.doc_id: r.cluster_id for r in
+               dedup_clusters(_pairs(spark, edges)).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", saved_group)
+        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
+    assert got == want
+    tracker = sc.statusTracker()
+    stages = (
+        tracker.getStageInfo(sid)
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    )
+    tasks = sum(s.numCompletedTasks for s in stages if s is not None)
+    assert 0 < tasks < 200, tasks
+
+
 def test_nonconvergence_raises(spark):
     edges = [(i, i + 1) for i in range(64)]  # diameter 64 > 2^2ish rounds
     with pytest.raises(RuntimeError, match="did not converge"):

@@ -17,7 +17,8 @@ Spark-first:
 - ``plans``     the end-to-end job: resume anti-join -> skew pre-pass ->
                 salted repartition -> light/heavy split -> extract ->
                 lineage merge.
-- ``streaming`` Structured Streaming variant of the extraction pass.
+- ``streaming`` Structured Streaming variant of the extraction pass
+                (checkpointed file source, committed foreachBatch mode).
 """
 
 __version__ = "0.1.0"

@@ -4,11 +4,11 @@ The reference lists png and jpg as first-class MIME types
 (lib/models/mime_type.py:11-12) with per-image config tuning
 (src/services/processing_config_manager.py image branch) and
 dimension validation before decode (src/utils/image_validator.py:36-150).
-Full pixel decode needs an image codec (optional-PIL paths live in
-operators/multimodal.py), but the DIMENSIONS are header fields readable
-in pure stdlib — so an image document becomes a SUCCESS row whose figure
-struct carries (format, width, height, payload_bytes) and whose content
-stays empty, instead of a hard failure.
+Full pixel decode needs an image codec (core/png_codec.py covers PNG
+only), but the DIMENSIONS are header fields readable in pure stdlib —
+so an image document becomes a SUCCESS row whose figure struct carries
+(format, width, height, payload_bytes) and whose content stays empty,
+instead of a hard failure.
 
 PINNED SEMANTICS:
 
@@ -44,7 +44,7 @@ PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 JPEG_MAGIC = b"\xff\xd8\xff"
 GIF_MAGICS = (b"GIF87a", b"GIF89a")
 
-# Pixel-dimension bomb caps (shared with operators/multimodal.py).
+# Pixel-dimension bomb caps (shared with core/png_codec.py).
 MAX_IMAGE_PIXELS = 100_000_000
 MAX_IMAGE_DIMENSION = 8192
 

@@ -7,8 +7,7 @@ is filter-0 rows + one deflate stream; decode reuses the SAME per-row
 unfilter the PDF layer already implements for /Predictor streams
 (pdf_extract._unpredict, PNG filters 0-4 per the row byte). This module
 makes the PNG leg of M11 real — 8-bit, non-interlaced, gray / gray+A /
-RGB / RGBA — leaving only JPEG pixel decode behind the optional PIL
-gate.
+RGB / RGBA. JPEG pixel decode is not implemented.
 
 Bomb discipline matches the rest of the repo: dimensions validated
 BEFORE inflating pixel data, and the deflate stream is inflated with an
@@ -21,7 +20,12 @@ from __future__ import annotations
 import struct
 import zlib
 
-from .taxonomy import CorruptedFileError, UnsupportedFormatError
+from .image_extract import MAX_IMAGE_DIMENSION, MAX_IMAGE_PIXELS
+from .taxonomy import (
+    CorruptedFileError,
+    OversizeDocumentError,
+    UnsupportedFormatError,
+)
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -67,11 +71,24 @@ def png_encode(
     )
 
 
+def validate_image_dims(width: int, height: int) -> None:
+    """Pixel-dimension bomb guard (reference image_validator.py:36-150):
+    a 40-byte zip-bombed PNG can claim 2^31 px; cap BEFORE full decode."""
+    if width > MAX_IMAGE_DIMENSION or height > MAX_IMAGE_DIMENSION:
+        raise OversizeDocumentError(
+            f"image dimension {width}x{height} exceeds "
+            f"{MAX_IMAGE_DIMENSION}px cap"
+        )
+    if width * height > MAX_IMAGE_PIXELS:
+        raise OversizeDocumentError(
+            f"image {width}x{height} exceeds {MAX_IMAGE_PIXELS}px cap"
+        )
+
+
 def png_decode(blob: bytes) -> tuple[bytes, int, int, int]:
     """PNG bytes -> (raw 8-bit interleaved pixels, width, height,
     channels). Typed degrades: palette/16-bit/interlaced PNGs raise
     UnsupportedFormatError, structural damage CorruptedFileError."""
-    from ..operators.multimodal import validate_image_dims
     from .pdf_extract import _unpredict
 
     if blob[:8] != PNG_SIG:

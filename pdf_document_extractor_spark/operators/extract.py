@@ -242,9 +242,10 @@ def extract_rows_py(
     return rows
 
 
-# Output flush thresholds: bound Python-side memory regardless of how many
-# multi-MB documents the JVM packed into one input Arrow batch (the heavy
-# pass runs with these, not with a session-wide batch-size knob).
+# Output flush thresholds: bound Python-side output memory regardless of how
+# many multi-MB documents the JVM packed into one input Arrow batch (input
+# batches of both passes are capped in records only, by the session's
+# spark.sql.execution.arrow.maxRecordsPerBatch).
 FLUSH_ROWS = 4096
 FLUSH_BYTES = 64 << 20
 

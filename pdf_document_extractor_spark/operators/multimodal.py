@@ -1,21 +1,19 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
-Images/audio/video ride as ``binary`` columns with a typed header; all
-Spark-side plumbing (schema, Arrow batch shape, partitioning, UDF
-signatures) is real and tested, and so are the fake-container decode/probe/
-resize paths. Real JPEG/PNG codecs go through an OPTIONAL Pillow import
-(reference asset_storage_service.py:196-239, :643-658): when Pillow is
-installed the same functions decode/probe/resize real images with the
-pixel-dimension bomb guard applied first (image_validator.py:13-14 caps);
-``NotImplementedError`` is raised only when the codec is genuinely absent
-(this container). Tests for the PIL paths skip-if-no-PIL.
+Two Arrow-batched operators, one per registry query:
 
-Fake deterministic container (so tests/oracles can verify the plumbing):
+- ``media_metadata`` (``mm_media_metadata``): typed metadata decode of a
+  binary media column holding the fake deterministic containers below,
+  so the oracle can verify the Spark plumbing (schema, Arrow batch shape,
+  UDF signature) exactly.
+- ``render_figures`` (``mm_figure_render``): the M11 figure image render
+  over PDF pages, stdlib-only (core/pdf_extract.render_figure_images,
+  core/png_codec.py).
+
+Fake deterministic containers:
 
   FIMG1 | width:u16be | height:u16be | channels:u8 | payload bytes
   FAUD1 | sample_rate:u32be | n_samples:u32be | payload bytes
-  FVID1 | width:u16be | height:u16be | fps:u8 | n_frames:u16be
-        | n_frames x frame_bytes:u16be-length-prefixed frames
 """
 
 from __future__ import annotations
@@ -149,275 +147,4 @@ def render_figures(pages: "DataFrame") -> "DataFrame":
 
     return pages.select("url", "html").mapInPandas(
         batch_fn, schema=FIGURE_IMAGE_SCHEMA
-    )
-
-
-VID_MAGIC = b"FVID1"
-
-
-def encode_fake_video(
-    width: int, height: int, fps: int, frames: list[bytes]
-) -> bytes:
-    out = VID_MAGIC + struct.pack(">HHBH", width, height, fps, len(frames))
-    for fr in frames:
-        out += struct.pack(">H", len(fr)) + fr
-    return out
-
-
-def frame_sample(
-    df: "DataFrame", every_nth: int = 2, id_col: str = "doc_id",
-    blob_col: str = "media",
-) -> "DataFrame":
-    """Sample every Nth frame from FVID1 containers -> one row per sampled
-    frame (doc_id, frame_idx, width, height, frame binary). Non-video rows
-    are dropped. Arrow-batched; a production build swaps the container
-    parser for pyav/ffmpeg keyframe extraction with the same signature
-    (1 input row -> k output rows is the shape that matters)."""
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for i, b in zip(
-                batch[id_col].to_numpy(), batch[blob_col].to_numpy()
-            ):
-                b = b or b""
-                if b[:5] != VID_MAGIC or len(b) < 12:
-                    continue
-                w, h, _fps, n = struct.unpack(">HHBH", b[5:12])
-                pos = 12
-                for fi in range(n):
-                    if pos + 2 > len(b):
-                        break
-                    (flen,) = struct.unpack(">H", b[pos:pos + 2])
-                    frame = b[pos + 2:pos + 2 + flen]
-                    pos += 2 + flen
-                    if fi % every_nth == 0:
-                        out.append(
-                            {
-                                "doc_id": int(i),
-                                "frame_idx": fi,
-                                "width": w,
-                                "height": h,
-                                "frame": frame,
-                            }
-                        )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "frame_idx", "width", "height", "frame"],
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(
-        batch_fn,
-        schema="doc_id long, frame_idx long, width long, height long, "
-        "frame binary",
-    )
-
-
-FEATURE_DIM = 16
-
-
-def media_features(
-    df: "DataFrame", id_col: str = "doc_id", blob_col: str = "media"
-) -> "DataFrame":
-    """Deterministic feature vector per media blob: L1-normalized 16-bin
-    byte histogram of the payload — a REAL vectorized numpy kernel (not a
-    stub), standing where a CNN/CLAP embedding would go in production.
-    Output: (doc_id, features array<float>) ready for the similarity
-    operators (brute_force_topk / lsh_bucketed_topk / embedding_near_pairs).
-    Rows with empty payloads are DROPPED (undecodable media has no
-    features; emitting a zero vector would poison cosine downstream).
-    """
-    import numpy as np
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, feats = [], []
-            for i, b in zip(
-                batch[id_col].to_numpy(), batch[blob_col].to_numpy()
-            ):
-                b = b or b""
-                if b[:5] == IMG_MAGIC:
-                    payload = b[10:]
-                elif b[:5] == AUD_MAGIC:
-                    payload = b[13:]
-                elif b[:5] == VID_MAGIC:
-                    payload = b[12:]
-                else:
-                    payload = b
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                if arr.size == 0:
-                    # empty payload -> no feature row; a zero vector would
-                    # poison downstream cosine (norm 0 -> NULL/NaN scores)
-                    continue
-                hist = np.bincount(arr >> 4, minlength=FEATURE_DIM).astype(
-                    "float64"
-                )
-                hist /= hist.sum()
-                ids.append(int(i))
-                feats.append(hist.astype("float32"))
-            yield pd.DataFrame({"doc_id": ids, "features": feats})
-
-    return df.select(id_col, blob_col).mapInPandas(
-        batch_fn, schema="doc_id long, features array<float>"
-    )
-
-
-# Decompression-bomb guard (M12/D6 pixel dimension caps — reference
-# src/utils/image_validator.py:13-14: 100 MP total, 8192 px per side).
-# Single definition in core/image_extract.py so the header-probe path and
-# this pixel path can never drift apart.
-from ..core.image_extract import (  # noqa: E402
-    MAX_IMAGE_DIMENSION,
-    MAX_IMAGE_PIXELS,
-)
-
-
-def _pil():
-    """Optional Pillow import: None in this container, the real module in
-    production (reference image handling at asset_storage_service.py:
-    196-239 get_image, :643-658 size probe)."""
-    try:
-        from PIL import Image
-        return Image
-    except ImportError:
-        return None
-
-
-def validate_image_dims(width: int, height: int) -> None:
-    """Pixel-dimension bomb guard (reference image_validator.py:36-150):
-    a 40-byte zip-bombed PNG can claim 2^31 px; cap BEFORE full decode."""
-    from ..core.taxonomy import OversizeDocumentError
-
-    if width > MAX_IMAGE_DIMENSION or height > MAX_IMAGE_DIMENSION:
-        raise OversizeDocumentError(
-            f"image dimension {width}x{height} exceeds "
-            f"{MAX_IMAGE_DIMENSION}px cap"
-        )
-    if width * height > MAX_IMAGE_PIXELS:
-        raise OversizeDocumentError(
-            f"image {width}x{height} exceeds {MAX_IMAGE_PIXELS}px cap"
-        )
-
-
-def probe_image_size(blob: bytes) -> tuple[int, int]:
-    """Header-only size probe (M12, reference asset_storage_service.py:
-    643-658): fake container reads its 10-byte header; real codecs use
-    PIL's lazy open (header parse, no pixel decode). Raises
-    NotImplementedError only when the codec is genuinely unavailable."""
-    blob = blob or b""
-    if blob[:5] == IMG_MAGIC and len(blob) >= 10:
-        w, h, _c = struct.unpack(">HHB", blob[5:10])
-        return w, h
-    # real codecs: the repo's own pure-stdlib header probes (PNG IHDR /
-    # JPEG SOFn / GIF LSD — core/image_extract.py) cover the raster trio
-    # without PIL; only exotic formats fall through to the optional gate
-    from ..core.image_extract import (
-        gif_dimensions,
-        jpeg_dimensions,
-        png_dimensions,
-    )
-
-    if blob[:8] == b"\x89PNG\r\n\x1a\n":
-        return png_dimensions(blob)
-    if blob[:2] == b"\xff\xd8":
-        return jpeg_dimensions(blob)
-    if blob[:6] in (b"GIF87a", b"GIF89a"):
-        return gif_dimensions(blob)
-    image_mod = _pil()
-    if image_mod is None:
-        raise NotImplementedError(
-            "size probe beyond PNG/JPEG/GIF requires Pillow (absent in "
-            "this container); the stdlib probes above are the tested shape"
-        )
-    import io
-
-    with image_mod.open(io.BytesIO(blob)) as im:
-        return im.size
-
-
-def decode_image_pixels(blob: bytes):
-    """Full pixel decode (M11) -> numpy uint8 array (h, w, c).
-
-    Fake containers decode deterministically without any codec (payload
-    bytes tiled to the declared dims — the tested shape); real JPEG/PNG
-    go through Pillow when installed. Both apply the bomb guard BEFORE
-    materializing pixels."""
-    import numpy as np
-
-    blob = blob or b""
-    if blob[:5] == IMG_MAGIC and len(blob) >= 10:
-        w, h, c = struct.unpack(">HHB", blob[5:10])
-        validate_image_dims(w, h)
-        payload = np.frombuffer(blob[10:], dtype=np.uint8)
-        if payload.size == 0:
-            payload = np.zeros(1, dtype=np.uint8)
-        return np.resize(payload, (h, w, c))
-    if blob[:8] == b"\x89PNG\r\n\x1a\n":
-        # real PNG pixel decode, pure stdlib (core/png_codec.py — the
-        # round-5 M11 closure); dims validated inside before inflate
-        from ..core.png_codec import png_decode
-
-        raw, w, h, c = png_decode(blob)
-        return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, c)
-    image_mod = _pil()
-    if image_mod is None:
-        raise NotImplementedError(
-            "JPEG/exotic pixel decode requires Pillow (absent in this "
-            "container); fake containers and real PNGs decode above"
-        )
-    import io
-
-    with image_mod.open(io.BytesIO(blob)) as im:
-        validate_image_dims(*im.size)
-        return np.asarray(im.convert("RGB"))
-
-
-def resize_images(df: "DataFrame", target: tuple[int, int]) -> "DataFrame":
-    """Resize over a binary media column -> (doc_id, resized binary).
-
-    Fake containers 're-encode' with the target dims (deterministic,
-    proves the binary Arrow round-trip); real images resize through
-    Pillow when installed and re-emit PNG bytes. Undecodable rows emit
-    NULL."""
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w, h = target
-        image_mod = _pil()
-        for batch in batches:
-            out = []
-            for i, b in zip(batch["doc_id"].to_numpy(),
-                            batch["media"].to_numpy()):
-                b = b or b""
-                meta = decode_media_meta(int(i), b)
-                if meta["kind"] == "image":
-                    out.append(
-                        {"doc_id": int(i), "resized": encode_fake_image(
-                            w, h, meta["channels"])}
-                    )
-                    continue
-                if image_mod is not None:
-                    import io
-
-                    from ..core.taxonomy import OversizeDocumentError
-
-                    try:
-                        with image_mod.open(io.BytesIO(b)) as im:
-                            validate_image_dims(*im.size)
-                            buf = io.BytesIO()
-                            im.convert("RGB").resize((w, h)).save(
-                                buf, format="PNG"
-                            )
-                            out.append(
-                                {"doc_id": int(i), "resized": buf.getvalue()}
-                            )
-                            continue
-                    except OversizeDocumentError:
-                        raise  # bomb guard must SURFACE, not become NULL
-                    except Exception:  # noqa: BLE001 — junk rows -> NULL
-                        pass
-                out.append({"doc_id": int(i), "resized": None})
-            yield pd.DataFrame(out)
-
-    return df.select("doc_id", "media").mapInPandas(
-        batch_fn, schema="doc_id long, resized binary"
     )

@@ -161,11 +161,19 @@ def split_heavy(
     heavy_bytes: int,
     html_col: str = "html",
 ) -> tuple["DataFrame", "DataFrame"]:
-    """(light, heavy) split on payload size — the heavy pass runs with its
-    own (smaller) Arrow batch size and stage (reference analog: the
-    oversize guards at src/utils/image_validator.py:36-150 and the north
-    rule's separate heavy-doc pass). Both branches produce identical output
-    schema; union happens at the sink."""
+    """(light, heavy) split on payload size — the heavy pass runs as its
+    own stage (reference analog: the oversize guards at
+    src/utils/image_validator.py:36-150 and the north rule's separate
+    heavy-doc pass). Both branches produce identical output schema; union
+    happens at the sink.
+
+    Both branches share the session's Arrow batch size
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``, 1,024 records in
+    plans/run.py's RECOMMENDED_CONF), so one heavy input batch may hold up
+    to 1,024 payloads over ``heavy_bytes``. What bounds memory today is
+    the url repartition plans/run.py applies to the heavy branch (heavy
+    documents spread over ``num_partitions`` tasks) and the UDF's output
+    flush (FLUSH_ROWS / FLUSH_BYTES in operators/extract.py)."""
     from pyspark.sql import functions as F  # noqa: N812
 
     cond = F.length(F.col(html_col)) > heavy_bytes

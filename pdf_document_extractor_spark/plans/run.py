@@ -13,8 +13,12 @@ Pipeline (SURVEY.md §3.1's Spark translation, north rule wiring):
 Scale notes:
 - The ONLY shuffle on the 100 TB path is the explicit salted repartition;
   everything else is scan -> narrow ops -> write.
-- The heavy branch gets many small partitions (repartition by url) so a task
-  never holds more than a few multi-MB payloads in one Arrow batch.
+- The heavy branch is repartitioned by url, so heavy documents spread
+  over num_partitions tasks. It shares the session's Arrow batch size
+  with the light branch (maxRecordsPerBatch, 1,024 records below): one
+  input batch may hold up to 1,024 heavy payloads. Only the UDF's output
+  flush (FLUSH_ROWS / FLUSH_BYTES, operators/extract.py) is bounded in
+  bytes.
 - Lineage is aggregated from the committed snapshot's metadata columns
   (partition_id/byte_count), not from a second pass over the bytes.
 - Soft failures raise inside the UDF => Spark task retry

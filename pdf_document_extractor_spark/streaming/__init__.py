@@ -1,1 +1,1 @@
-"""Structured Streaming variants of the extraction pass."""
+"""Structured Streaming variant of the extraction pass."""

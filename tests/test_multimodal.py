@@ -1,17 +1,15 @@
-"""Multimodal plumbing tests: fake-container metadata decode, binary
-round-trip through Arrow, stub gating."""
+"""Multimodal tests: fake-container metadata decode through Arrow, image
+header probes and extraction, the stdlib PNG codec and figure render."""
 
 from __future__ import annotations
 
 import pytest
 
 from pdf_document_extractor_spark.operators.multimodal import (
-    decode_image_pixels,
     decode_media_meta,
     encode_fake_audio,
     encode_fake_image,
     media_metadata,
-    resize_images,
 )
 
 
@@ -42,133 +40,43 @@ def test_media_metadata_spark(spark):
     assert got[3].valid is False and got[4].valid is False
 
 
-def test_resize_binary_roundtrip(spark):
-    rows = [(1, encode_fake_image(640, 480, 3)), (2, b"JUNK")]
-    df = spark.createDataFrame(rows, schema="doc_id long, media binary")
-    out = {r.doc_id: r.resized for r in resize_images(df, (32, 32)).collect()}
-    meta = decode_media_meta(1, bytes(out[1]))
-    assert (meta["width"], meta["height"], meta["channels"]) == (32, 32, 3)
-    assert out[2] is None
-
-
-def test_fake_container_decode_is_real_now():
-    # round-2 change: fake containers decode to pixels without any codec;
-    # NotImplementedError is reserved for real codecs without Pillow
-    arr = decode_image_pixels(encode_fake_image(4, 4))
-    assert arr.shape == (4, 4, 3)
-
-def test_frame_sample(spark):
-    from pdf_document_extractor_spark.operators.multimodal import (
-        encode_fake_video,
-        frame_sample,
-    )
-
-    frames = [bytes([i]) * (i + 1) for i in range(6)]
-    rows = [
-        (1, encode_fake_video(320, 240, 24, frames)),
-        (2, encode_fake_image(10, 10, 1)),  # not a video -> dropped
-    ]
-    df = spark.createDataFrame(rows, schema="doc_id long, media binary")
-    got = sorted(
-        (r.doc_id, r.frame_idx, bytes(r.frame))
-        for r in frame_sample(df, every_nth=2).collect()
-    )
-    assert got == [(1, 0, frames[0]), (1, 2, frames[2]), (1, 4, frames[4])]
-    w = frame_sample(df, every_nth=2).collect()[0]
-    assert (w.width, w.height) == (320, 240)
-
-
-def test_media_features_ready_for_similarity(spark):
-    from pdf_document_extractor_spark.operators.multimodal import (
-        FEATURE_DIM,
-        media_features,
-    )
-
-    rows = [
-        (1, encode_fake_image(9, 9, 1)),
-        (2, encode_fake_audio(8000, 10)),
-        (3, b"JUNKPAYLOADBYTES"),
-    ]
-    df = spark.createDataFrame(rows, schema="doc_id long, media binary")
-    got = {r.doc_id: list(r.features) for r in media_features(df).collect()}
-    assert all(len(v) == FEATURE_DIM for v in got.values())
-    assert all(abs(sum(v) - 1.0) < 1e-5 for v in got.values())
-    # deterministic: same blob -> same vector
-    again = {r.doc_id: list(r.features) for r in media_features(df).collect()}
-    assert got == again
-    # pipes into the similarity operators (array<float> embedding contract)
-    from pyspark.sql import functions as F
-    from pdf_document_extractor_spark.operators.similarity import (
-        brute_force_topk,
-    )
-    emb = media_features(df).select(
-        F.col("doc_id").alias("vec_id"), F.col("features").alias("embedding")
-    )
-    topk = brute_force_topk(emb, query_ids_below=2, k=2).collect()
-    assert len(topk) >= 1
-
-
 # --------------------------------------------------------------------------
-# M11/M12: size probe, pixel decode, bomb guard (PIL paths skip-if-no-PIL)
+# M11/M12: header probes, PNG pixel decode, bomb guard
 # --------------------------------------------------------------------------
-
-
-def test_probe_image_size_fake_container():
-    from pdf_document_extractor_spark.operators.multimodal import (
-        encode_fake_image,
-        probe_image_size,
-    )
-
-    assert probe_image_size(encode_fake_image(120, 80, 3)) == (120, 80)
-
-
-def test_decode_image_pixels_fake_container_shape():
-    from pdf_document_extractor_spark.operators.multimodal import (
-        decode_image_pixels,
-        encode_fake_image,
-    )
-
-    arr = decode_image_pixels(encode_fake_image(12, 8, 3))
-    assert arr.shape == (8, 12, 3)
-    assert arr.dtype.name == "uint8"
-    # deterministic
-    assert (arr == decode_image_pixels(encode_fake_image(12, 8, 3))).all()
 
 
 def test_pixel_bomb_guard():
-    import pytest
-
+    from pdf_document_extractor_spark.core.png_codec import (
+        png_decode,
+        png_encode,
+        validate_image_dims,
+    )
     from pdf_document_extractor_spark.core.taxonomy import (
         OversizeDocumentError,
-    )
-    from pdf_document_extractor_spark.operators.multimodal import (
-        decode_image_pixels,
-        encode_fake_image,
-        validate_image_dims,
     )
 
     with pytest.raises(OversizeDocumentError):
         validate_image_dims(9000, 10)  # per-side cap (8192)
     validate_image_dims(8192, 8192)  # 67 MP, both caps satisfied
     with pytest.raises(OversizeDocumentError):
-        decode_image_pixels(encode_fake_image(9000, 10, 1))
+        png_decode(png_encode(b"\x00" * 9000 * 10, 9000, 10, 1))
 
 
 def test_real_codec_gate_narrowed_to_jpeg_pixels():
-    """Since round 5 real PNGs probe AND pixel-decode stdlib-only
-    (core/png_codec.py); the optional-PIL NotImplementedError gate
-    remains only for JPEG PIXEL decode (probes are stdlib for the whole
+    """Real PNGs probe AND pixel-decode stdlib-only (core/png_codec.py);
+    JPEG gets a header probe only (probes are stdlib for the whole
     raster trio)."""
-    import pytest
-
-    from pdf_document_extractor_spark.operators.multimodal import (
-        _pil,
-        decode_image_pixels,
-        probe_image_size,
-    )
-
     import struct
     import zlib
+
+    from pdf_document_extractor_spark.core.image_extract import (
+        jpeg_dimensions,
+        png_dimensions,
+    )
+    from pdf_document_extractor_spark.core.png_codec import png_decode
+    from pdf_document_extractor_spark.core.taxonomy import (
+        CorruptedFileError,
+    )
 
     def chunk(ctype: bytes, payload: bytes) -> bytes:
         return (
@@ -186,38 +94,26 @@ def test_real_codec_gate_narrowed_to_jpeg_pixels():
         + chunk(b"IDAT", idat[4:])
         + chunk(b"IEND", b"")
     )
-    assert probe_image_size(png_1x1) == (1, 1)
-    arr = decode_image_pixels(png_1x1)
-    assert arr.shape == (1, 1, 4)
-    assert arr.tobytes() == b"\x10\x20\x30\x40"
+    assert png_dimensions(png_1x1) == (1, 1)
+    assert png_decode(png_1x1) == (b"\x10\x20\x30\x40", 1, 1, 4)
     # the round-3 hex fixture used here previously turned out to be a
     # MALFORMED png (IDAT declares 13 bytes, carries 16): the codec must
     # reject it typed, not decode garbage
-    import pytest as _pytest
-
-    from pdf_document_extractor_spark.core.taxonomy import (
-        CorruptedFileError,
-    )
-
     bad = bytes.fromhex(
         "89504e470d0a1a0a0000000d49484452000000010000000108060000001f15c489"
         "0000000d49444154789c626001000000ffff03000006000557bfabd40000000049"
         "454e44ae426082"
     )
-    with _pytest.raises(CorruptedFileError):
-        decode_image_pixels(bad)
-    # minimal JPEG with SOF0 13x7: header probe works without PIL...
+    with pytest.raises(CorruptedFileError):
+        png_decode(bad)
+    # minimal JPEG with SOF0 13x7: the header probe needs no codec
     jpeg = (
         b"\xff\xd8"
         + b"\xff\xc0" + b"\x00\x11" + b"\x08" + (7).to_bytes(2, "big")
         + (13).to_bytes(2, "big") + b"\x03" + b"\x01\x11\x00" * 3
         + b"\xff\xd9"
     )
-    assert probe_image_size(jpeg) == (13, 7)
-    # ...pixel decode is the one remaining PIL-gated path
-    if _pil() is None:
-        with pytest.raises(NotImplementedError):
-            decode_image_pixels(jpeg)
+    assert jpeg_dimensions(jpeg) == (13, 7)
 
 
 # ---------------------------------------------------------------------------
@@ -438,24 +334,24 @@ def test_render_figures_operator(spark):
 
 
 def test_probe_and_decode_handle_real_png_without_pil():
-    """probe_image_size routes PNG/JPEG/GIF through the repo's stdlib
-    header probes; decode_image_pixels decodes real PNG pixels — no
-    NotImplementedError for the raster trio probes (round-5)."""
+    """The stdlib header probes size PNG and GIF; png_decode decodes real
+    PNG pixels without an imaging library."""
     import struct
 
-    from pdf_document_extractor_spark.core.png_codec import png_encode
-    from pdf_document_extractor_spark.operators.multimodal import (
-        decode_image_pixels,
-        probe_image_size,
+    from pdf_document_extractor_spark.core.image_extract import (
+        gif_dimensions,
+        png_dimensions,
+    )
+    from pdf_document_extractor_spark.core.png_codec import (
+        png_decode,
+        png_encode,
     )
 
     png = png_encode(bytes(range(12)) * 2, 4, 2, 3)
-    assert probe_image_size(png) == (4, 2)
-    arr = decode_image_pixels(png)
-    assert arr.shape == (2, 4, 3)
-    assert bytes(arr.tobytes()) == bytes(range(12)) * 2
+    assert png_dimensions(png) == (4, 2)
+    assert png_decode(png) == (bytes(range(12)) * 2, 4, 2, 3)
     gif = b"GIF89a" + struct.pack("<HH", 5, 9) + b"\x00\x00\x00\x3b"
-    assert probe_image_size(gif) == (5, 9)
+    assert gif_dimensions(gif) == (5, 9)
 
 
 def test_figure_render_jpeg_passthrough_and_exotic_metadata_only():

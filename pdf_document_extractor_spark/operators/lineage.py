@@ -10,7 +10,16 @@ id, doc count, byte count, failure manifest)").
 
 Zero extra passes over the document bytes: ``extracted`` rows already carry
 ``partition_id`` (TaskContext, captured inside the extract UDF) and
-``byte_count``; lineage is a groupBy over the (tiny) extracted metadata.
+``byte_count``; lineage is one aggregate over the (tiny) extracted
+metadata.
+
+A document is an input row. Each input row's output rows come from one
+``extract_rows_py`` call in one task, so they share ``partition_id``,
+``status``, ``byte_count`` and ``page_count``, and exactly one of them has
+``page_number <= 1`` (a failure's single row is page 0; every extractor
+numbers pages from 1). A narrow filter therefore yields one row per
+document with no shuffle on url, and a url repeated in the input counts
+once per input row — ``doc_count`` reconciles with the job's ``docs_in``.
 """
 
 from __future__ import annotations
@@ -33,20 +42,14 @@ LINEAGE_COLS = [
 
 
 def _per_doc(extracted: "DataFrame"):
-    """Collapse page rows to one row per document (page_number<=1 keeps the
-    single row of both failure docs (0) and one-page docs (1))."""
+    """One row per document: the row with ``page_number <= 1`` (page 0 of a
+    failure, page 1 of a success). A filter, not a groupBy on url — the
+    module docstring states why it is exact."""
     from pyspark.sql import functions as F  # noqa: N812
 
-    return (
-        extracted.groupBy("url")
-        .agg(
-            F.first("partition_id").alias("partition_id"),
-            F.first("status").alias("status"),
-            F.first("error_type").alias("error_type"),
-            F.first("error_message").alias("error_message"),
-            F.first("byte_count").alias("byte_count"),
-            F.max("page_count").alias("page_count"),
-        )
+    return extracted.filter(F.col("page_number") <= 1).select(
+        "url", "partition_id", "status", "error_type", "error_message",
+        "byte_count", "page_count",
     )
 
 

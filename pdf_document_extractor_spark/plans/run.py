@@ -20,7 +20,11 @@ Scale notes:
   flush (FLUSH_ROWS / FLUSH_BYTES, operators/extract.py) is bounded in
   bytes.
 - Lineage is aggregated from the committed snapshot's metadata columns
-  (partition_id/byte_count), not from a second pass over the bytes.
+  (partition_id/byte_count), not from a second pass over the bytes. A
+  filter on page_number keeps one row per document (operators/lineage.py),
+  so lineage_rows has one exchange, of partial aggregates on
+  partition_id, and run_rollup one single-partition exchange of a row
+  per task; no exchange is on url.
 - Soft failures raise inside the UDF => Spark task retry
   (spark.task.maxFailures); a job that dies leaves NO manifest entry, so the
   rerun resumes exactly (snapshot-commit discipline, sources/catalog.py).
@@ -54,7 +58,6 @@ HEAVY_BYTES_DEFAULT = 1 << 20  # 1 MiB
 class RunResult:
     run_id: str
     docs_in: int
-    docs_done: int
     wall_s: float
     committed: bool
     snapshot_id: int
@@ -78,7 +81,7 @@ def run_extraction_job(
 
     if run_id in extracted_tbl.committed_run_ids():
         # rerun of an already-committed run: exactly-once visible effect
-        return RunResult(run_id, 0, 0, time.time() - t0, False,
+        return RunResult(run_id, 0, time.time() - t0, False,
                          extracted_tbl.current_snapshot_id())
 
     if num_partitions is None:
@@ -95,7 +98,7 @@ def run_extraction_job(
     # (the input is scanned again only by the extraction stage itself)
     hot, docs_in = host_stats(todo, hot_fraction=hot_fraction)
     if docs_in == 0:
-        return RunResult(run_id, 0, 0, time.time() - t0, False,
+        return RunResult(run_id, 0, time.time() - t0, False,
                          extracted_tbl.current_snapshot_id())
     placed = salted_repartition(
         todo, num_partitions, hot=hot, salt_buckets=salt_buckets
@@ -138,9 +141,8 @@ def run_extraction_job(
     )
     lineage_tbl.commit(lineage_out, run_id)
 
-    docs_done = docs_in
     return RunResult(
-        run_id, docs_in, docs_done, time.time() - t0, True, snap.snapshot_id
+        run_id, docs_in, time.time() - t0, True, snap.snapshot_id
     )
 
 

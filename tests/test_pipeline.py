@@ -58,6 +58,92 @@ def test_job_end_to_end_and_lineage_reconciles(spark, tmp_path, corpus_df):
     assert rollup.hard_fail_count == len(hard_urls)
 
 
+def test_lineage_counts_every_input_row(spark, tmp_path):
+    """A document is an input row: a url repeated in the input is extracted
+    and counted once per row, so lineage reconciles with docs_in and a
+    repeated hard failure is in the manifest once per row."""
+    docs = gen_scale_corpus(300)
+    hard = next(d for d in docs if d.doc_class == "pdf_corrupt")
+    repeated = [hard] + [d for d in docs if d is not hard][:4]
+    pages = pages_df_from_fixtures(spark, docs + repeated)
+    wh = str(tmp_path / "wh")
+    res = run_extraction_job(spark, pages, wh, "r1", num_partitions=8)
+    assert res.committed
+
+    lineage = SnapshotTable(wh, "lineage").read(spark)
+    lin = {r.partition_id: r for r in lineage.collect()}
+    rollup = lin.pop(-1)
+    per_partition = sum(r.doc_count for r in lin.values())
+    assert res.docs_in == 305 == rollup.doc_count == per_partition
+    manifest = [
+        e["url"]
+        for r in lin.values()
+        for e in json.loads(r.failure_manifest or "[]")
+    ]
+    assert manifest.count(hard.url) == 2
+
+
+def test_lineage_plans_do_not_shuffle_on_url(spark, tmp_path):
+    """Lineage over a committed snapshot keeps one row per document with a
+    filter on page_number: neither executed plan may exchange on url or
+    sort-aggregate (a groupBy(url) over string first() plans both)."""
+    from pdf_document_extractor_spark.operators.extract import extract_pages
+    from pdf_document_extractor_spark.operators.lineage import (
+        lineage_rows,
+        run_rollup,
+    )
+
+    docs = gen_unit_corpus()
+    tbl = SnapshotTable(str(tmp_path / "wh"), "extracted")
+    snap = tbl.commit(extract_pages(pages_df_from_fixtures(spark, docs)), "r1")
+    this_run = tbl.read_snapshot(spark, snap.snapshot_id)
+
+    lin = lineage_rows(this_run, "r1")
+    rollup = run_rollup(this_run)
+    assert sum(r.doc_count for r in lin.collect()) == len(docs)
+    assert rollup.collect()[0].total_docs == len(docs)
+    for df in (lin, rollup):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan, plan
+        assert "hashpartitioning(url" not in plan, plan
+        assert "SortAggregate" not in plan, plan
+
+
+def test_one_row_per_document_has_page_number_at_most_one(monkeypatch):
+    """Lineage's premise (operators/lineage.py): a document's rows come from
+    one extract_rows_py call, agree on status, byte_count, page_count and
+    partition_id, and exactly one has page_number <= 1 — for every class of
+    the unit corpus, every other synthesized format, and a quarantined
+    soft failure."""
+    from pdf_document_extractor_spark.operators import extract as ex
+    from pdf_document_extractor_spark.sources.pages import synth_payload
+
+    inputs = [(d.url, d.html) for d in gen_unit_corpus()]
+    for mode in ("txt", "docx", "xlsx", "pptx", "rtf", "odt", "ods", "epub",
+                 "doc", "xls", "image", "gif", "gzip_html", "pdf2", "pdf_xs"):
+        for doc_id in (1, 2, 17):
+            payload = synth_payload(doc_id, "lineage premise text", mode)
+            inputs.append((f"https://synth.example/{mode}/{doc_id}", payload))
+    rows = {
+        url: ex.extract_rows_py(url, payload, partition_id=i)
+        for i, (url, payload) in enumerate(inputs)
+    }
+    statuses = {r["status"] for doc in rows.values() for r in doc}
+    assert statuses == {"success", "hard_failure"}
+    assert any(len(doc) > 1 for doc in rows.values())  # multi-page docs
+    for url, doc in rows.items():
+        assert sum(r["page_number"] <= 1 for r in doc) == 1, url
+        for col in ("status", "byte_count", "page_count", "partition_id"):
+            assert len({r[col] for r in doc}) == 1, (url, col)
+
+    def transient(url, data, config=None):
+        raise TimeoutError("connection timed out fetching shard")
+
+    monkeypatch.setattr(ex, "extract_document", transient)
+    (soft,) = ex.extract_rows_py("u", b"<p>x</p>", 3, quarantine_soft=True)
+    assert soft["status"] == "soft_failure" and soft["page_number"] == 0
+
+
 def test_resume_is_idempotent(spark, tmp_path, corpus_df):
     wh = str(tmp_path / "wh")
     res1 = run_extraction_job(spark, corpus_df, wh, "r1", num_partitions=8)

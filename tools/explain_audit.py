@@ -28,14 +28,26 @@ def capture(df) -> str:
     return buf.getvalue()
 
 
-def audit(title: str, df, must_contain: list[str], note: str) -> None:
+def audit(
+    title: str,
+    df,
+    must_contain: list[str],
+    note: str,
+    must_not_contain: tuple[str, ...] = (),
+) -> None:
     plan = capture(df)
     missing = [m for m in must_contain if m not in plan]
-    status = "OK" if not missing else f"MISSING {missing}"
+    present = [m for m in must_not_contain if m in plan]
+    failed = bool(missing or present)
+    status = f"MISSING {missing} PRESENT {present}" if failed else "OK"
     print(f"{title:45s} {status}")
-    SECTIONS.append((title, plan, must_contain, note))
-    if missing:
-        raise SystemExit(f"plan audit failed: {title}: missing {missing}")
+    asserted = must_contain + [f"NO {m}" for m in must_not_contain]
+    SECTIONS.append((title, plan, asserted, note))
+    if failed:
+        raise SystemExit(
+            f"plan audit failed: {title}: missing {missing}, "
+            f"present {present}"
+        )
 
 
 def main() -> None:
@@ -113,6 +125,41 @@ def main() -> None:
         "and salt width are the two knobs that absorb Zipfian host skew. "
         "Both helper columns are projected away after the Exchange, so "
         "placement provably cannot change output content.",
+    )
+
+    # -- lineage: one row per document by page_number, no url shuffle -------
+    from pdf_document_extractor_spark.operators.lineage import (
+        lineage_rows,
+        run_rollup,
+    )
+    from pdf_document_extractor_spark.sources.catalog import SnapshotTable
+
+    extracted_tbl = SnapshotTable(os.path.join(tmp, "wh"), "extracted")
+    snap = extracted_tbl.commit(extract_pages(pages), "audit")
+    this_run = extracted_tbl.read_snapshot(spark, snap.snapshot_id)
+    no_url_shuffle = ("hashpartitioning(url", "SortAggregate")
+    page_filter = "PushedFilters: [IsNotNull(page_number), LessThanOrEqual"
+    audit(
+        "lineage aggregate (no url shuffle)",
+        lineage_rows(this_run, "audit"),
+        [page_filter, "hashpartitioning(partition_id"],
+        "Per-partition lineage over a committed snapshot: a filter on "
+        "page_number keeps each document's one row with page_number <= 1 "
+        "(operators/lineage.py states why that is exact; the predicate "
+        "reaches the parquet reader), then one hash aggregate with a "
+        "single exchange on partition_id. No exchange on url and no sort: "
+        "a groupBy(url) over string first() would plan Sort -> "
+        "SortAggregate -> Exchange(url) -> Sort -> SortAggregate.",
+        must_not_contain=no_url_shuffle,
+    )
+    audit(
+        "lineage run rollup (no url shuffle)",
+        run_rollup(this_run),
+        [page_filter, "SinglePartition"],
+        "The run rollup reads the same snapshot through the same filter: "
+        "a partial aggregate per scan task and one single-partition "
+        "exchange of a row per task.",
+        must_not_contain=no_url_shuffle,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -276,17 +323,11 @@ def main() -> None:
     from pdf_document_extractor_spark.operators.multimodal import (
         render_figures,
     )
-    from pdf_document_extractor_spark.sources.pages import (
-        synthesize_pages_from_documents,
-    )
 
-    figs_plan = capture(
-        render_figures(
-            synthesize_pages_from_documents(
-                spark, "/root/testdata/sf0.001", "pdf_scanned"
-            )
-        )
-    )
+    # over the pages parquet scan: synthesizing pages in the same plan
+    # spreads the single-file documents table with a repartition that is
+    # not render's
+    figs_plan = capture(render_figures(pages))
     assert "Exchange" not in figs_plan, (
         "figure render must be a single narrow mapInPandas pass"
     )
